@@ -148,7 +148,7 @@ def point_in_polygon_join_shuffle(
     cand = pts.join(ptiles, on=join_keys, how="inner")
 
     out_schema = StructType(
-        [f for f in points.schema.fields if f.name in keep]
+        [points.schema[c] for c in keep]
         + [StructField(id_col, LongType(), False)]
     )
 

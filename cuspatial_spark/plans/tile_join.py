@@ -21,6 +21,11 @@ phase's job, done as an equi-join).
 At 100 TB the only wide operation is the optional shuffle join; the
 broadcast path is shuffle-free: scan -> codegen filter/keys ->
 broadcast join -> mapInPandas -> sink.
+
+The nearest-linestring join needs no join operator at all: the
+linestring cover is a driver-side CSR (tile -> candidate lines) that
+one Arrow-batched kernel looks each point's tile up in, so its plan is
+scan -> codegen keys -> mapInPandas -> sink.
 """
 
 from __future__ import annotations
@@ -123,7 +128,8 @@ def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFr
     n = int(ro[-1]) if len(ro) else 0
     idx = np.arange(n, dtype=np.int64)
     prev = idx - 1
-    prev[ro[:-1]] = ro[1:] - 1
+    ring = ro[1:] > ro[:-1]  # empty rings own no vertex to re-point
+    prev[ro[:-1][ring]] = ro[1:][ring] - 1
     ax, ay, bx, by = px[idx], py[idx], px[prev], py[prev]
     keep = (ax != bx) | (ay != by)
     rows = []
@@ -153,19 +159,31 @@ def _pip_jvm_hit_expr(segs, x, y):
     exactly ON a polygon edge gets parity-dependent membership instead
     of a guaranteed False.  Measure-zero for real data; use
     refine='kernel' when exact edge semantics matter.
+
+    The point rides in the fold's accumulator rather than being read
+    from the outer row inside the lambda.  Spark canonicalizes a
+    higher-order function by renumbering its lambda variables from 0,
+    in the same id space as attributes, so an outer column with a low
+    expression id (a fresh session's first columns) reads as a lambda
+    variable; constraint inference then sees a predicate over the
+    segment side alone, pushes it below the join and the plan fails at
+    run time with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND.
     """
+
+    def step(acc, s):
+        px, py = acc["x"], acc["y"]
+        crosses = ((s["ay"] > py) != (s["by"] > py)) & (
+            ((px - s["ax"]) * (s["by"] - s["ay"]) < (s["bx"] - s["ax"]) * (py - s["ay"]))
+            != (s["ay"] > py)
+        )
+        return F.struct(
+            (acc["n"] + F.when(crosses, 1).otherwise(0)).alias("n"),
+            px.alias("x"), py.alias("y"),
+        )
+
     crossings = F.aggregate(
-        segs,
-        F.lit(0),
-        lambda acc, s: acc
-        + F.when(
-            ((s["ay"] > y) != (s["by"] > y))
-            & (
-                ((x - s["ax"]) * (s["by"] - s["ay"]) < (s["bx"] - s["ax"]) * (y - s["ay"]))
-                != (s["ay"] > y)
-            ),
-            1,
-        ).otherwise(0),
+        segs, F.struct(F.lit(0).alias("n"), x.alias("x"), y.alias("y")), step,
+        lambda acc: acc["n"],
     )
     return crossings % 2 == 1
 
@@ -250,9 +268,7 @@ def point_in_polygon_join(
             .select(*keep, "polygon_id")
         )
 
-    out_schema = StructType(
-        [f for f in points.schema.fields if f.name in keep] + PIP_JOIN_SCHEMA_SUFFIX
-    )
+    out_schema = StructType([points.schema[c] for c in keep] + PIP_JOIN_SCHEMA_SUFFIX)
     poly_offsets, ring_offsets = polygons.part_offsets, polygons.ring_offsets
     px, py, pids = polygons.x, polygons.y, polygons.ids
 
@@ -272,47 +288,100 @@ def point_in_polygon_join(
     return candidates.mapInPandas(refine_fn, schema=out_schema)
 
 
-def _linestring_segments_df(
-    spark: SparkSession, linestrings: LinestringArrays
-) -> DataFrame:
-    """Consecutive-vertex segments per linestring as a broadcastable
-    DataFrame ``(__line_idx, linestring_id, __segs)`` — data, not
-    literal expressions (see _polygon_segments_df)."""
-    po = np.asarray(linestrings.part_offsets)
-    lx = np.asarray(linestrings.x, dtype=np.float64)
-    ly = np.asarray(linestrings.y, dtype=np.float64)
-    rows = []
-    for li in range(len(linestrings)):
-        s, e = int(po[li]), int(po[li + 1])
-        segs = list(
-            zip(
-                lx[s : e - 1].tolist(), ly[s : e - 1].tolist(),
-                lx[s + 1 : e].tolist(), ly[s + 1 : e].tolist(),
-            )
+PROGRESSIVE_THRESHOLD = 16.0
+"""``progressive='auto'`` widens the radius in rounds when the
+full-radius tile cover averages more than this many linestrings per
+tile."""
+
+MAX_SEGMENT_EVALS = 1 << 18
+"""Point-to-segment distance evaluations per kernel call (about 60 MB
+of NumPy temporaries).  A batch's points are chunked to stay under it,
+so a hot tile bounds a task's memory instead of growing it; a single
+point whose candidates alone exceed it is evaluated on its own."""
+
+
+def _line_cover(
+    linestrings: LinestringArrays, radius: float,
+    x_min: float, y_min: float, scale: float, max_depth: int, tile_level: int,
+) -> tuple[np.ndarray | None, np.ndarray, np.ndarray, np.ndarray]:
+    """The radius cover as a CSR ``(tiles, offsets, lines, segs)``: tile
+    ``tiles[k]`` has candidate line indices
+    ``lines[offsets[k]:offsets[k + 1]]``, ordered by linestring id, with
+    ``segs[k]`` segments among them.  ``tiles`` is None when the cover
+    is vacuous (every line covers every tile): then the single slot
+    holds the whole layer for every point."""
+    minx, miny, maxx, maxy = linestrings.bounding_boxes(radius)
+    line_idx, tiles = tiles_covering_bboxes(
+        minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
+    )
+    ids = np.asarray(linestrings.ids)
+    nl = len(linestrings)
+    # a bbox covers each tile at most once, so a cover this large means
+    # every line covers every tile
+    if nl and len(tiles) == nl << (2 * tile_level):
+        keys, offs, lines = None, np.array([0, nl]), np.lexsort((np.arange(nl), ids))
+    else:
+        order = np.lexsort((line_idx, ids[line_idx], tiles))
+        keys, starts = np.unique(tiles[order], return_index=True)
+        offs, lines = np.append(starts, len(order)), line_idx[order]
+    nseg = np.maximum(np.diff(linestrings.part_offsets), 1) - 1
+    seg_cum = np.concatenate(([0], np.cumsum(nseg[lines])))
+    return keys, offs, lines, np.diff(seg_cum[offs])
+
+
+def _row_chunks(weights: np.ndarray, cap: int) -> Iterator[tuple[int, int]]:
+    """Consecutive row ranges [s, e) whose weights sum to at most cap
+    (a range is never empty, so a row heavier than cap stands alone)."""
+    cum = np.cumsum(weights)
+    s = 0
+    while s < len(weights):
+        base = cum[s - 1] if s else 0
+        e = max(int(np.searchsorted(cum, base + cap, side="right")), s + 1)
+        yield s, e
+        s = e
+
+
+def _nearest_in_cover(
+    px: np.ndarray, py: np.ndarray, tile: np.ndarray | None,
+    cover: tuple, linestrings: LinestringArrays, cap: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per point, the nearest of the candidate lines of its tile:
+    ``(rows, line, distance)`` for the points with at least one
+    candidate.  Points with a NaN or infinite coordinate get none.
+    Equidistant candidates resolve to the smallest linestring id (the
+    CSR order); the result does not depend on ``cap``."""
+    keys, offs, lines, segs = cover
+    ok = np.isfinite(px) & np.isfinite(py)
+    if keys is None:
+        slot = np.zeros(len(px), dtype=np.int64)
+    elif len(keys) == 0:
+        ok[:] = False
+        slot = np.zeros(len(px), dtype=np.int64)
+    else:
+        slot = np.minimum(np.searchsorted(keys, tile), len(keys) - 1)
+        ok &= keys[slot] == tile
+    rows = np.flatnonzero(ok)
+    slot = slot[rows]
+    start, count = offs[slot], offs[slot + 1] - offs[slot]
+    best_line = np.empty(len(rows), dtype=np.int64)
+    best_d = np.empty(len(rows), dtype=np.float64)
+    for s, e in _row_chunks(segs[slot], cap):
+        c = count[s:e]
+        run = np.cumsum(c) - c  # each point's first pair
+        pair = np.repeat(np.arange(s, e), c)
+        line = lines[start[pair] + np.arange(len(pair)) - np.repeat(run, c)]
+        d = point_linestring_distance_pairs(
+            px[rows[pair]], py[rows[pair]], line,
+            linestrings.part_offsets, linestrings.x, linestrings.y,
         )
-        rows.append((int(li), int(linestrings.ids[li]), segs))
-    return spark.createDataFrame(
-        rows, schema=f"__line_idx long, linestring_id long, __segs {SEGS_SCHEMA}"
-    )
-
-
-def _point_segment_d2_expr(px, py, s):
-    """Clamped point-to-segment squared distance as a JVM expression —
-    same op order as kernels/segment.py."""
-    abx = s["bx"] - s["ax"]
-    aby = s["by"] - s["ay"]
-    l2 = abx * abx + aby * aby
-    r = (px - s["ax"]) * abx + (py - s["ay"]) * aby
-    dac = (px - s["ax"]) * (px - s["ax"]) + (py - s["ay"]) * (py - s["ay"])
-    dbc = (px - s["bx"]) * (px - s["bx"]) + (py - s["by"]) * (py - s["by"])
-    qx = s["ax"] + r / l2 * abx
-    qy = s["ay"] + r / l2 * aby
-    din = (px - qx) * (px - qx) + (py - qy) * (py - qy)
-    return (
-        F.when(l2 == 0, dac)
-        .when((r <= 0) | (r >= l2), F.least(dac, dbc))
-        .otherwise(din)
-    )
+        m = np.fmin.reduceat(d, run)
+        at = np.minimum.reduceat(
+            np.where(d == np.repeat(m, c), np.arange(len(d)), len(d)), run
+        )
+        at = np.where(at == len(d), run, at)  # all-NaN candidates: the first
+        best_line[s:e] = line[at]
+        best_d[s:e] = d[at]
+    return rows, best_line, best_d
 
 
 def point_to_nearest_linestring_join(
@@ -329,44 +398,49 @@ def point_to_nearest_linestring_join(
     max_depth: int = 15,
     tile_level: int = 8,
     keep_columns: list[str] | None = None,
-    refine: str = "auto",
     progressive: bool | str = "auto",
-    progressive_threshold: float = 16.0,
 ) -> DataFrame:
-    """Distributed nearest-linestring: candidate linestrings per point
-    come from the expanded-bbox tile cover; per point the minimum
-    distance (and its linestring) is reduced per candidate batch plus a
-    final groupBy min for batch boundaries.
+    """Distributed nearest-linestring: returns ``keep_columns`` (in that
+    order) plus ``linestring_id`` and ``distance`` for every reachable
+    point.
 
-    Points whose tile meets no bbox expanded by ``expansion_radius``
-    are dropped (same reachability contract as the reference's bbox
-    filter, core/spatial/join.py:317-320 semantics).
+    Contract.  A point's candidates are the linestrings whose bbox,
+    expanded by ``expansion_radius``, meets the point's tile (the
+    reference's bbox filter, core/spatial/join.py:317-320 semantics);
+    the point gets one row, for its nearest candidate, and no row when
+    it has none.  Out-of-AOI points carry the sentinel Morton key, so
+    they fall in the last tile.  Points with a null, NaN or infinite
+    coordinate get no row.  Equidistant candidates resolve to the
+    smallest linestring id.
+
+    Plan.  The radius cover is sorted driver-side into a CSR (tile ->
+    candidate lines by id), the Morton tile is a JVM expression, and
+    one Arrow-batched NumPy kernel per batch looks each point's tile up
+    in the CSR and keeps the per-point minimum of
+    ``kernels.segment.point_linestring_distance_pairs`` over its
+    candidates: scan -> codegen project -> MapInPandas, with no join
+    and no shuffle.  When the cover is vacuous (every line covers every
+    tile) the tile expression is skipped and every point gets the whole
+    layer.  A batch is chunked to at most ``MAX_SEGMENT_EVALS`` segment
+    evaluations per kernel call.
 
     Progressive radius widening (the 100-TB candidate bound): a large
-    ``expansion_radius`` naively replicates every point to every
-    linestring whose expanded bbox covers its tile — with an AOI-sized
-    radius that is an undeclared cross join.  Instead the join runs in
-    rounds with radius tile, 2*tile, 4*tile, ..., expansion_radius.
-    A round's candidate set provably contains EVERY linestring whose
-    true distance <= that round's radius (a bbox expanded by r around a
-    line at distance <= r covers the point, hence the point's tile), so
-    any point whose round-minimum distance is < r is globally resolved
-    and leaves the join; only still-unresolved points (an exponentially
-    shrinking set) are re-joined at the doubled radius.  Total
-    candidate rows stay O(|points| * hit_density) instead of
-    O(|points| * |linestrings|).
-
-    refine: 'jvm' computes min segment distance as a JVM higher-order
-    expression over a broadcast-joined segment table (no Python);
-    'kernel' uses the Arrow-batched NumPy kernel; 'auto' picks 'jvm'
-    for layers with <= 200k vertices (broadcast-size bound).
-
-    progressive: 'auto' engages radius widening only when the full-
-    radius tile cover averages more than ``progressive_threshold``
-    linestrings per tile — below that the single-shot join's candidate
-    set is already <= threshold * |points| and the extra rounds
-    (shuffle + checkpoint each) cost more than they save.  The cover
-    density is known driver-side for free from the bbox-tile table.
+    ``expansion_radius`` makes every point a candidate of every line
+    whose expanded bbox covers its tile — with an AOI-sized radius, an
+    undeclared cross join.  With ``progressive`` the join runs in rounds
+    with radius tile, 2*tile, 4*tile, ..., expansion_radius.  A round's
+    candidates provably contain EVERY linestring whose true distance is
+    <= that round's radius (a bbox expanded by r around a line at
+    distance <= r covers the point, hence the point's tile), so a point
+    whose round minimum is < r (strictly: a line at exactly r could sit
+    on a cover boundary) is resolved; only the others, an exponentially
+    shrinking set, go on to the doubled radius.  Out-of-AOI points are
+    not where their sentinel tile is, so they wait for the final round,
+    which makes the result identical to the single round's.  Each
+    non-final round is checkpointed, since its output feeds both the
+    result and the next round.  ``progressive='auto'`` widens only when
+    the full-radius cover averages more than ``PROGRESSIVE_THRESHOLD``
+    lines per tile.
     """
     from ..geometry import require_single_part
 
@@ -374,267 +448,83 @@ def point_to_nearest_linestring_join(
     if scale is None:
         scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
     keep = keep_columns if keep_columns is not None else [c for c in points.columns]
-    if refine == "auto":
-        refine = "jvm" if len(linestrings.x) <= 200_000 else "kernel"
-
-    spark = points.sparkSession
     need = list(dict.fromkeys(keep + [x, y]))
-    INF = float("inf")
+    grid = (x_min, y_min, scale, max_depth, tile_level)
 
     tile_size = scale * (1 << (max_depth - tile_level))
     if progressive == "auto":
-        minx, miny, maxx, maxy = linestrings.bounding_boxes(expansion_radius)
-        _, full_tiles = tiles_covering_bboxes(
-            minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
-        )
-        lines_per_tile = len(full_tiles) / float(1 << (2 * tile_level))
-        progressive = lines_per_tile > progressive_threshold
-    if progressive and expansion_radius > tile_size:
-        radii = []
+        keys, offs, _, _ = _line_cover(linestrings, expansion_radius, *grid)
+        covered = len(linestrings) << (2 * tile_level) if keys is None else offs[-1]
+        progressive = covered / float(1 << (2 * tile_level)) > PROGRESSIVE_THRESHOLD
+    radii = []
+    if progressive:
         r = tile_size
         while r < expansion_radius:
             radii.append(r)
             r *= 2.0
-        radii.append(float(expansion_radius))
-    else:
-        radii = [float(expansion_radius)]
+    radii.append(float(expansion_radius))
 
-    seg_df = None
-    part_offsets, lx, ly, lids = (
-        linestrings.part_offsets, linestrings.x, linestrings.y, linestrings.ids,
-    )
-
-    if len(radii) == 1 and refine == "jvm":
-        # r6 dense single-round path (guide §2.4): instead of
-        # [points ⋈ exploded (tile, line) table] -> [⋈ segment table]
-        # -> [1-row-per-point groupBy min] — which materializes
-        # |points| x lines-per-tile candidate rows and shuffles one
-        # row per point for the min — broadcast ONE row per tile
-        # carrying the covering lines' segments, and take the min
-        # row-locally with array_min over (distance, id) structs (the
-        # exact ordering the groupBy's min(struct) used).  Same
-        # reachability (tiles with no line are absent -> inner join
-        # drops the point), same fold arithmetic, same tie-break.
-        # Bounded by the same 200k broadcast-segment limit as the
-        # segment table; falls through to the join shape when the
-        # per-tile duplication would exceed it.
-        po = np.asarray(part_offsets)
-        seg_counts = np.maximum(po[1:] - po[:-1] - 1, 0)
-        minx, miny, maxx, maxy = linestrings.bounding_boxes(radii[0])
-        bbox_idx, cover_tiles = tiles_covering_bboxes(
-            minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
-        )
-        n_tiles = 1 << (2 * tile_level)
-        full_cover = (
-            len(set(cover_tiles.tolist())) == n_tiles
-            and len(cover_tiles) == n_tiles * len(linestrings)
-        )
-        lids_arr = np.asarray(lids)
-        if full_cover and np.all(np.diff(lids_arr) > 0):
-            # r6 full-cover kernel path: when EVERY tile is covered by
-            # EVERY line (small layer, radius >= AOI span) the tile
-            # filter is vacuous — every point is reachable and its
-            # candidate set is the whole layer — so the per-point min
-            # runs as ONE slim Arrow crossing over the vectorized
-            # NumPy segment-distance kernel (the same kernel and op
-            # order as the SQL oracle and the JVM fold, so distances
-            # are bit-identical — A/B-verified over all 1M sf1.0
-            # rows).  argmin's first-index tie-break equals the
-            # (distance, id) struct min because ids ascend with index
-            # (guarded; otherwise fall through).  Both JVM expression
-            # forms of this reduction (higher-order fold, literal
-            # codegen) were measured ~2x slower: the fold pays
-            # interpreted per-element lambda evaluation and the
-            # literal form exceeds JIT method limits.
-            nl = len(linestrings)
-            po_k, lx_k, ly_k = np.asarray(part_offsets), np.asarray(lx), np.asarray(ly)
-            out_schema = StructType(
-                [f for f in points.schema.fields if f.name in keep]
-                + [
-                    StructField("linestring_id", LongType(), False),
-                    StructField("distance", DoubleType(), False),
-                ]
-            )
-
-            def dense_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    n = len(pdf)
-                    if n == 0:
-                        continue
-                    row = np.repeat(np.arange(n), nl)
-                    idx = np.tile(np.arange(nl), n)
-                    d = point_linestring_distance_pairs(
-                        pdf[x].to_numpy()[row], pdf[y].to_numpy()[row],
-                        idx, po_k, lx_k, ly_k,
-                    ).reshape(n, nl)
-                    am = np.argmin(d, axis=1)
-                    out = pdf[keep].copy()
-                    out["linestring_id"] = lids_arr[am].astype(np.int64)
-                    out["distance"] = d[np.arange(n), am]
-                    yield out
-
-            return points.select(*need).mapInPandas(dense_fn, schema=out_schema)
-        if seg_counts[bbox_idx].sum() <= 200_000:
-            lxa = np.asarray(lx, dtype=np.float64)
-            lya = np.asarray(ly, dtype=np.float64)
-            seg_lists = [
-                list(
-                    zip(
-                        lxa[int(po[li]) : int(po[li + 1]) - 1].tolist(),
-                        lya[int(po[li]) : int(po[li + 1]) - 1].tolist(),
-                        lxa[int(po[li]) + 1 : int(po[li + 1])].tolist(),
-                        lya[int(po[li]) + 1 : int(po[li + 1])].tolist(),
-                    )
-                )
-                for li in range(len(linestrings))
+    def nearest_round(pts: DataFrame, radius: float, carry: bool) -> DataFrame:
+        """One radius round.  The final (or only) round returns ``keep``
+        + result for the points with a candidate; a carry round returns
+        ``need`` + result for every point, with linestring_id -1 and
+        distance inf where it has none."""
+        cover = _line_cover(linestrings, radius, *grid)
+        cap = MAX_SEGMENT_EVALS
+        cols = need if carry else keep
+        schema = StructType(
+            [pts.schema[c] for c in cols]
+            + [
+                StructField("linestring_id", LongType(), False),
+                StructField("distance", DoubleType(), False),
             ]
-            by_tile: dict[int, list] = {}
-            for li, tl in zip(bbox_idx, cover_tiles):
-                by_tile.setdefault(int(tl), []).append(
-                    (int(lids[li]), seg_lists[li])
+        )
+        src = pts.select(*need)
+        if cover[0] is not None:
+            src = assign_tiles(
+                src, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level,
+                key_col="__key", tile_col="__tile",
+            ).select(*need, "__tile")
+
+        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                px = pdf[x].to_numpy(np.float64, na_value=np.nan)
+                py = pdf[y].to_numpy(np.float64, na_value=np.nan)
+                tile = (
+                    None if cover[0] is None
+                    else pdf["__tile"].to_numpy(np.int64, na_value=-1)
                 )
-            tile_lines = spark.createDataFrame(
-                [(t, ls) for t, ls in by_tile.items()],
-                schema=(
-                    "tile long, __lines array<struct<"
-                    f"linestring_id:bigint,__segs:{SEGS_SCHEMA}>>"
-                ),
-            )
-            tiled = assign_tiles(
-                points, x, y, x_min, x_max, y_min, y_max, scale, max_depth,
-                tile_level,
-            )
-            dmax = float(np.finfo(np.float64).max)
-            scored = F.transform(
-                F.col("__lines"),
-                lambda l: F.struct(
-                    F.sqrt(
-                        F.aggregate(
-                            l["__segs"],
-                            F.lit(dmax),
-                            lambda acc, s: F.least(
-                                acc,
-                                _point_segment_d2_expr(F.col(x), F.col(y), s),
-                            ),
-                        )
-                    ).alias("distance"),
-                    l["linestring_id"].alias("linestring_id"),
-                ),
-            )
-            return (
-                tiled.join(F.broadcast(tile_lines), on="tile")
-                .withColumn("__m", F.array_min(scored))
-                .select(
-                    *keep,
-                    F.col("__m.linestring_id").alias("linestring_id"),
-                    F.col("__m.distance").alias("distance"),
-                )
-            )
+                rows_all = np.flatnonzero(np.isfinite(px) & np.isfinite(py))
+                if carry:
+                    # an out-of-AOI point sits in the sentinel tile, not
+                    # where it lies, so a round cannot prove its minimum
+                    # global: it waits for the final round
+                    inside = (px >= x_min) & (px <= x_max) & (py >= y_min) & (py <= y_max)
+                    px = np.where(inside, px, np.nan)
+                rows, line, d = _nearest_in_cover(px, py, tile, cover, linestrings, cap)
+                ids = np.asarray(linestrings.ids)[line]
+                if carry:
+                    lid = np.full(len(pdf), -1, dtype=np.int64)
+                    dist = np.full(len(pdf), np.inf)
+                    lid[rows], dist[rows] = ids, d
+                    rows, ids, d = rows_all, lid[rows_all], dist[rows_all]
+                out = pdf[cols].take(rows)
+                out["linestring_id"] = ids
+                out["distance"] = d
+                yield out
 
-    if refine == "jvm":
-        seg_df = _linestring_segments_df(spark, linestrings)
-
-    def _score_round(pts_df: DataFrame, radius: float, carry_unmatched: bool) -> DataFrame:
-        """Per-point min (distance, linestring_id) over the candidates
-        of one radius round.  carry_unmatched keeps unmatched points
-        with distance=inf / id=-1 (left joins, grouped on need) so they
-        can flow to the next round; the final/single round uses inner
-        joins grouped on keep — the cheaper plan, identical to the
-        single-shot join (measured ~40% faster than the carry shape)."""
-        minx, miny, maxx, maxy = linestrings.bounding_boxes(radius)
-        bbox_idx, tiles = tiles_covering_bboxes(
-            minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
-        )
-        line_tiles = spark.createDataFrame(
-            pd.DataFrame({"tile": tiles, "__line_idx": bbox_idx}),
-            schema="tile: long, __line_idx: long",
-        )
-        tiled = assign_tiles(
-            pts_df, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level
-        )
-        how = "left" if carry_unmatched else "inner"
-        group_cols = need if carry_unmatched else keep
-        candidates = tiled.join(F.broadcast(line_tiles), on="tile", how=how).select(
-            *need, "__line_idx"
-        )
-
-        if refine == "jvm":
-            dmax = float(np.finfo(np.float64).max)
-            d2 = F.aggregate(
-                F.col("__segs"),
-                F.lit(dmax),
-                lambda acc, s: F.least(acc, _point_segment_d2_expr(F.col(x), F.col(y), s)),
-            )
-            joined = candidates.join(F.broadcast(seg_df), on="__line_idx", how=how)
-            if carry_unmatched:
-                scored = joined.select(
-                    *need,
-                    F.coalesce(F.col("linestring_id"), F.lit(-1)).alias("linestring_id"),
-                    F.coalesce(F.sqrt(d2), F.lit(INF)).alias("distance"),
-                )
-            else:
-                scored = joined.select(
-                    *group_cols, "linestring_id", F.sqrt(d2).alias("distance")
-                )
-        else:
-            mid_schema = StructType(
-                [pts_df.schema[c] for c in group_cols]
-                + [
-                    StructField("linestring_id", LongType(), False),
-                    StructField("distance", DoubleType(), False),
-                ]
-            )
-
-            def refine_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    idx = pdf["__line_idx"].fillna(-1).to_numpy(dtype=np.int64)
-                    valid = idx >= 0
-                    d = np.full(len(pdf), INF)
-                    if valid.any():
-                        d[valid] = point_linestring_distance_pairs(
-                            pdf[x].to_numpy()[valid], pdf[y].to_numpy()[valid],
-                            idx[valid], part_offsets, lx, ly,
-                        )
-                    out = pdf[group_cols].copy()
-                    out["linestring_id"] = np.where(valid, lids[np.where(valid, idx, 0)], -1)
-                    out["distance"] = d
-                    yield out
-
-            scored = candidates.mapInPandas(refine_fn, schema=mid_schema)
-
-        # per-point min reduction (map-side partial agg; ties -> min id);
-        # keep_columns must uniquely identify a point (e.g. include its id)
-        return (
-            scored.groupBy(*group_cols)
-            .agg(F.min(F.struct("distance", "linestring_id")).alias("__m"))
-            .select(*group_cols, F.col("__m.linestring_id").alias("linestring_id"),
-                    F.col("__m.distance").alias("distance"))
-        )
+        return src.mapInPandas(kernel, schema=schema)
 
     out_cols = [*keep, "linestring_id", "distance"]
     results: list[DataFrame] = []
     carry = points
-    for k, radius in enumerate(radii):
-        final = k == len(radii) - 1
-        scored = _score_round(carry, radius, carry_unmatched=not final)
-        if len(radii) > 1:
-            # each non-final round's result is consumed twice (accepted
-            # rows -> output union, unresolved rows -> next round's
-            # input); checkpointing flattens the lineage so round k's
-            # join is evaluated once, not once per downstream round
-            scored = scored.localCheckpoint(eager=False)
-        if final:
-            # final round: reference reachability — any candidate match
-            # counts (inner join already dropped unreachable points)
-            results.append(scored.select(*out_cols))
-        else:
-            # strictly-less: a line at distance exactly r could fall on
-            # a tile-cover boundary and be missed, so only d < r is
-            # provably the global minimum
-            results.append(scored.where(F.col("distance") < radius).select(*out_cols))
-            carry = scored.where(F.col("distance") >= radius).select(*need)
+    for radius in radii[:-1]:
+        scored = nearest_round(carry, radius, carry=True).localCheckpoint(eager=False)
+        results.append(scored.where(F.col("distance") < radius).select(*out_cols))
+        carry = scored.where(F.col("distance") >= radius).select(*need)
+    results.append(nearest_round(carry, radii[-1], carry=False))
 
     out = results[0]
     for part in results[1:]:

@@ -260,6 +260,10 @@ class TestShuffleJoin:
             assert set(zip(shuf["polygon_id"], shuf["point_id"])) == set(
                 zip(bcast["polygon_id"], bcast["point_id"])
             )
+        # output columns follow keep_columns, not the points schema
+        out = point_in_polygon_join_shuffle(pts, poly_df, keep_columns=["y", "point_id"], **kw)
+        assert out.columns == ["y", "point_id", "polygon_id"]
+        assert len(out.collect()) == len(bcast)
 
 
 class TestStreaming:

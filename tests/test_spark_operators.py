@@ -333,12 +333,86 @@ class TestDistributedTileJoin:
         ).toPandas()
         assert set(got["point_id"]) == {1}
 
-    @pytest.mark.parametrize("refine", ["jvm", "kernel"])
-    def test_nearest_join_progressive_equals_single_shot(self, spark, refine):
+    def test_pip_keep_columns_order_on_every_tier(self, spark, small_polygons):
+        """Output columns follow keep_columns, not the points schema, on
+        the JVM and kernel refines alike, and both return the same pairs
+        off the polygon edges."""
+        pdf = pd.DataFrame(
+            {
+                "point_id": np.arange(71, dtype=np.int64),
+                "x": np.asarray(G.SMALL_POINTS_X, dtype=np.float64),
+                "y": np.asarray(G.SMALL_POINTS_Y, dtype=np.float64),
+                "tag": [f"p{i}" for i in range(71)],
+            }
+        )
+        pts = spark.createDataFrame(pdf).repartition(4)
+        keep = ["tag", "y", "point_id"]
+        kw = dict(
+            x_min=P["x_min"], x_max=P["x_max"], y_min=P["y_min"], y_max=P["y_max"],
+            max_depth=8, tile_level=3, keep_columns=keep,
+        )
+        outs = [
+            point_in_polygon_join(pts, small_polygons, refine="jvm", **kw),
+            point_in_polygon_join(pts, small_polygons, edge_exact=True, **kw),
+        ]
+        rows = []
+        for out in outs:
+            assert out.columns == [*keep, "polygon_id"]
+            rows.append(sorted(tuple(r) for r in out.collect()))
+        assert rows[0] == rows[1] and len(rows[0]) > 0
+        assert all(r[0] == f"p{r[2]}" for r in rows[0])
+
+    def test_jvm_refine_in_fresh_session(self):
+        """Regression: in a fresh session the first columns have low
+        expression ids, which Spark's canonicalization of higher-order
+        functions reuses for lambda variables.  With the point read
+        inside the ray-cast lambda, constraint inference pushed the
+        predicate below the segment join and the job failed with
+        INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND.  Needs its own JVM, so it
+        runs in a subprocess."""
+        import os
+        import subprocess
+        import sys
+
+        script = """
+from pyspark.sql import SparkSession, functions as F
+from cuspatial_spark import PolygonArrays
+from cuspatial_spark.plans import point_in_polygon_join
+from tests import golden_fixtures as G
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "8")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.range(1000).mapInPandas(lambda it: it, schema="id: long").count()
+i = F.col("id")
+pts = spark.range(0, 2000, 1, 4).select(
+    i.alias("page_id"),
+    ((i * 2654435761 % 104729) / 104729.0 * 8.0).alias("x"),
+    ((i * 97003 % 999983) / 999983.0 * 8.0).alias("y"),
+)
+polys = PolygonArrays(G.SMALL_POLY_OFFSETS, G.SMALL_RING_OFFSETS,
+                      G.SMALL_POLY_XS, G.SMALL_POLY_YS)
+out = point_in_polygon_join(pts, polys, x_min=0.0, x_max=8.0, y_min=0.0,
+                            y_max=8.0, keep_columns=["page_id"], refine="jvm")
+out.write.format("noop").mode("overwrite").save()
+print("rows", out.count())
+spark.stop()
+"""
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, PYTHONPATH=root + os.pathsep + os.environ.get("PYTHONPATH", ""))
+        res = subprocess.run(
+            [sys.executable, "-c", script], cwd=root, env=env,
+            capture_output=True, text=True, timeout=600,
+        )
+        errors = [ln for ln in res.stderr.splitlines() if "Exception" in ln]
+        assert res.returncode == 0, errors[:3] or res.stderr[-3000:]
+        assert "rows " in res.stdout
+
+    def test_nearest_join_progressive_equals_single_shot(self, spark):
         # Dense layer (64 linestrings over a 8x8 AOI) with an AOI-sized
         # expansion radius: progressive radius widening must return the
         # identical (point -> nearest line, distance) assignment as the
-        # single-shot join, for both refine paths.
+        # single-shot join.
         rng = np.random.default_rng(33)
         n_lines, pts_per = 64, 4
         offs = np.arange(n_lines + 1, dtype=np.int64) * pts_per
@@ -356,7 +430,7 @@ class TestDistributedTileJoin:
         pts = spark.createDataFrame(pdf).repartition(8)
         kw = dict(
             expansion_radius=16.0, x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0,
-            max_depth=8, tile_level=3, keep_columns=["point_id"], refine=refine,
+            max_depth=8, tile_level=3, keep_columns=["point_id"],
         )
         single = (
             point_to_nearest_linestring_join(pts, lines, progressive=False, **kw)

@@ -1,19 +1,23 @@
-"""Local replica of the driver's correctness gate: run every
-queries() entry on Spark at sf0.01 and its oracle_sql() in DuckDB,
-compare row count, schema width, and order-insensitive values."""
+"""Local replica of the correctness gate: run every queries() entry on
+Spark and its oracle_sql() in DuckDB, compare row count, schema width,
+and order-insensitive values.
+
+Usage: python3 tools/check_oracles.py SF_DIR [SF_DIR ...] [name,name,...]
+
+Each SF_DIR (a scale factor's parquet directory) is checked in turn;
+an argument that is not a directory restricts the run to the named
+queries.  Exits non-zero if any query mismatches at any scale factor."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -30,34 +34,23 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="stable").reset_index(drop=True)
 
 
-def main():
-    import __spark_entry__ as E
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "6g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+def check(spark, E, sf_dir: str, only: list[str] | None) -> list[str]:
+    """Runs the queries against their oracles over one scale factor's
+    parquet directory; returns the names that failed."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
     qs = E.queries()
     oracles = E.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         try:
-            got = fn(spark, SF_DIR).toPandas()
+            got = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"[SPARK-ERROR] {name}: {type(e).__name__}: {str(e)[:300]}")
@@ -100,9 +93,36 @@ def main():
         else:
             print(f"[OK        ] {name}: {len(g)} rows")
 
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} queries match")
+    n = len([q for q in qs if not only or q in only])
+    print(f"\n{n - len(failures)}/{n} queries match ({sf_dir})")
+    return failures
+
+
+def main():
+    args = sys.argv[1:]
+    sf_dirs = [a for a in args if os.path.isdir(a)]
+    only = [n for a in args if not os.path.isdir(a) for n in a.split(",")] or None
+    if not sf_dirs:
+        sys.exit(__doc__)
+
+    import __spark_entry__ as E
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .config("spark.sql.shuffle.partitions", "16")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "6g")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+
+    failed = False
+    for sf_dir in sf_dirs:
+        failed |= bool(check(spark, E, sf_dir, only))
     spark.stop()
-    sys.exit(1 if failures else 0)
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":
