@@ -378,25 +378,27 @@ def q_pip_shuffle(spark, sf_dir):
     tiles, the join shuffles on (tile, salt), and the refine rebuilds
     per-batch polygon tables vectorized.  Must produce the identical
     pair set as the broadcast pip_join — same oracle."""
-    import numpy as np
+    import pyarrow as pa
 
-    import pandas as pd
-
+    from cuspatial_spark.frames import local_frame
     from cuspatial_spark.plans.shuffle_join import point_in_polygon_join_shuffle
 
     po = np.asarray(POLY_OFFSETS)
     ro = np.asarray(RING_OFFSETS)
-    xs, ys = np.asarray(POLY_X), np.asarray(POLY_Y)
-    rows = []
-    for p in range(len(po) - 1):
-        vs, ve = ro[po[p]], ro[po[p + 1]]
-        seg_xy = np.empty(2 * (ve - vs))
-        seg_xy[::2] = xs[vs:ve]
-        seg_xy[1::2] = ys[vs:ve]
-        offs = [int(r - vs) for r in ro[po[p]:po[p + 1] + 1]]
-        rows.append((p, offs, seg_xy.tolist()))
-    poly_df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["polygon_id", "ring_offsets", "xy"])
+    n_rings = np.diff(po) + 1  # a polygon's ring offsets include its end
+    first = np.repeat(po[:-1], n_rings)
+    ring = first + np.arange(n_rings.sum()) - np.repeat(np.cumsum(n_rings) - n_rings, n_rings)
+    offs = pa.ListArray.from_arrays(
+        np.concatenate(([0], np.cumsum(n_rings))).astype(np.int32),
+        ro[ring] - ro[first],
+    )
+    # the layer's vertices are contiguous, polygon by polygon
+    xy = np.empty(2 * len(POLY_X))
+    xy[::2], xy[1::2] = POLY_X, POLY_Y
+    xy = pa.ListArray.from_arrays((2 * ro[po]).astype(np.int32), xy)
+    poly_df = local_frame(
+        spark, [np.arange(len(po) - 1), offs, xy],
+        "polygon_id long, ring_offsets array<long>, xy array<double>",
     )
     pts = _points(spark, sf_dir).select("event_id", "x", "y")
     return point_in_polygon_join_shuffle(
@@ -465,17 +467,17 @@ def q_quadtree(spark, sf_dir):
     scan over flattened-key order, internal offsets as an exclusive
     scan over (level, key) table order seeded with the level-0 node
     count — the same construction as kernels/quadtree.py:99-192."""
+    from cuspatial_spark.frames import local_frame
     from cuspatial_spark.operators.indexing import quadtree_on_points_global
 
     pts = _points(spark, sf_dir).select("x", "y")
     pdf = quadtree_on_points_global(
         pts, 0.0, 8.0, 0.0, 8.0, scale=0.0, max_depth=4, max_size=60
     )
-    pdf = pdf.astype(
-        {"key": "int64", "level": "int64", "is_internal_node": "bool",
-         "length": "int64", "offset": "int64"}
+    return local_frame(
+        spark, [pdf[c] for c in pdf.columns],
+        "key long, level long, is_internal_node boolean, length long, offset long",
     )
-    return spark.createDataFrame(pdf)
 
 
 def q_quadtree_bbox_join(spark, sf_dir):
@@ -488,8 +490,7 @@ def q_quadtree_bbox_join(spark, sf_dir):
     every (bbox, leaf) rectangle-overlap pair, with the kernel's exact
     strict comparison chain and node positions in (level, key) table
     order."""
-    import pandas as pd
-
+    from cuspatial_spark.frames import local_frame
     from cuspatial_spark.kernels.quadtree import (
         Quadtree,
         join_quadtree_and_bounding_boxes,
@@ -511,11 +512,7 @@ def q_quadtree_bbox_join(spark, sf_dir):
     bb, qq = join_quadtree_and_bounding_boxes(
         qt, minx, miny, maxx, maxy, 0.0, 8.0, 0.0, 8.0, 0.0, 4
     )
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {"bbox_offset": bb.astype("int64"), "quad_offset": qq.astype("int64")}
-        )
-    )
+    return local_frame(spark, [bb, qq], "bbox_offset long, quad_offset long")
 
 
 def q_haversine(spark, sf_dir):
@@ -1100,7 +1097,11 @@ def q_bpe_tokens(spark, sf_dir):
     the sf0.001 corpus) applied as a pure-codegen replace chain — no
     Python stage, no shuffle — then the counts packed GPT-style into
     512-token training sequences (concat-and-chunk, scale-safe
-    two-level prefix sum — textops/packing.py).  The oracle replays
+    two-level prefix sum — textops/packing.py).  The packing's
+    per-partition base table is driver-side data; it runs no Python
+    worker only because it is built as an Arrow ``LocalRelation``
+    (cuspatial_spark.frames) — as pickled rows, every job reading it
+    started a Python job of defaultParallelism tasks.  The oracle replays
     the IDENTICAL replace chain in DuckDB (bpe_chain_sql) and the
     packing as one SUM-OVER window, so merge order, overlap
     semantics, pre-tokenization AND every start/seq assignment are

@@ -33,4 +33,8 @@ from .geometry import (  # noqa: F401
 from .geodataframe import GeoDataFrame  # noqa: F401
 from .geoseries import GeoSeries  # noqa: F401
 
+from .worker import guard_import_caches
+
 __version__ = "0.1.0"
+
+guard_import_caches()

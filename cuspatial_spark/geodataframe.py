@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .frames import local_frame
 from .geoseries import GeoSeries
 from .io.geopandas import POINT, from_geopandas as _ingest
 
@@ -113,17 +114,13 @@ class GeoDataFrame:
 
     def payload_df(self):
         """Payload columns as a Spark DataFrame with ``row_id``."""
-        import pandas as pd
-
         cols = {"row_id": np.arange(self._n)}
         cols.update(self._payload)
-        return self.spark.createDataFrame(pd.DataFrame(cols))
+        return local_frame(self.spark, cols)
 
     def points_df(self, geometry: str):
         """Payload + (x, y) of a POINT geometry column as one Spark
         DataFrame — the distributed side of a spatial join."""
-        import pandas as pd
-
         gs = self._geometry[geometry]
         layers = gs.layers
         if not np.all(layers.feature_types == POINT):
@@ -132,7 +129,7 @@ class GeoDataFrame:
         cols.update(self._payload)
         cols["x"] = layers.point_x[layers.union_offsets]
         cols["y"] = layers.point_y[layers.union_offsets]
-        return self.spark.createDataFrame(pd.DataFrame(cols))
+        return local_frame(self.spark, cols)
 
     def spatial_join(
         self,

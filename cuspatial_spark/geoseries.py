@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .frames import local_frame
 from .io.geopandas import (
     LINESTRING,
     MULTIPOINT,
@@ -575,7 +576,7 @@ class GeoSeries:
 
         side(self, True, other._kind_code)
         side(other, False, self._kind_code)
-        return self.spark.createDataFrame(pd.DataFrame(cols)), kw
+        return local_frame(self.spark, cols), kw
 
     def _layer_of(self, for_predicate: bool = False):
         """Geometry-level layer container.  Multi-part rows: the
@@ -638,18 +639,16 @@ class GeoSeries:
                 "(align the series first, or pass align=True)"
             )
         none_mask = (lt == NONE) | (rt == NONE)
+        typ = "double" if isinstance(none_value, float) else "boolean"
+        schema = f"row_id long, {out_col} {typ}"
         if len(none_mask) == 0:
             # empty series: empty typed result, not an IndexError
-            typ = "double" if isinstance(none_value, float) else "boolean"
-            return self.spark.createDataFrame(
-                [], schema=f"row_id long, {out_col} {typ}"
-            )
+            return local_frame(self.spark, [[], []], schema)
         parts = []
         if none_mask.any():
             none_idx = np.flatnonzero(none_mask)
-            pdf = pd.DataFrame({"row_id": none_idx})
-            pdf[out_col] = none_value
-            parts.append(self.spark.createDataFrame(pdf))
+            answer = [none_value] * len(none_idx)
+            parts.append(local_frame(self.spark, [none_idx, answer], schema))
         if not none_mask.all():
             if (
                 not none_mask.any()
@@ -720,8 +719,8 @@ class GeoSeries:
             # no valid pairs (empty side, or all rows missing after
             # align): empty result with the contract schema instead of
             # a min()-of-empty crash
-            return self.spark.createDataFrame(
-                [], "point_indices long, polygon_indices long"
+            return local_frame(
+                self.spark, [[], []], "point_indices long, polygon_indices long"
             )
         lhs = self if len(lhs_valid) == len(self) else self.iloc(lhs_valid)
         flat = lhs.layers.polygon_flat_layer()
@@ -738,9 +737,7 @@ class GeoSeries:
         u = other.layers.union_offsets[rhs_valid]
         xs = other.layers.point_x[u]
         ys = other.layers.point_y[u]
-        pts = self.spark.createDataFrame(
-            pd.DataFrame({"point_indices": rhs_valid, "x": xs, "y": ys})
-        )
+        pts = local_frame(self.spark, {"point_indices": rhs_valid, "x": xs, "y": ys})
         pad = 1e-9
         x_lo = float(min(xs.min(), polys.x.min())) - pad
         x_hi = float(max(xs.max(), polys.x.max())) + pad
@@ -773,20 +770,14 @@ class GeoSeries:
         rt = np.asarray(other.layers.feature_types)
         valid = np.flatnonzero((lt == POLYGON) & (rt != NONE))
         sizes = other.layers.sizes()
-        pdf = pd.DataFrame(
-            {
-                "row_id": valid,
-                "polygon_index": self.layers.union_offsets[valid],
-                "rhs_row": valid,
-                "rhs_size": sizes[valid],
-            }
+        pairs = local_frame(
+            self.spark,
+            [valid, self.layers.union_offsets[valid], valid, sizes[valid]],
+            "row_id long, polygon_index long, rhs_row long, rhs_size long",
         )
         rhs_layers = other.layers
         counted = polygon_contains_properly_count(
-            self.spark.createDataFrame(
-                pdf,
-                schema="row_id: long, polygon_index: long, rhs_row: long, rhs_size: long",
-            ),
+            pairs,
             polys,
             rhs_layers.row_vertices,
             polygon_idx="polygon_index",
@@ -804,12 +795,16 @@ class GeoSeries:
         out = counted.select("row_id", expr.alias(out_col))
         missing = np.setdiff1d(np.arange(n), valid)
         if len(missing):
-            mpdf = pd.DataFrame({"row_id": missing})
             # missing rows answer False for EVERY boolean mode (the
             # module-wide missing-geometry semantics, same as the
             # full-mode path's none_value=False) and 0 for basic_count
-            mpdf[out_col] = 0 if mode == "basic_count" else False
-            out = out.unionByName(self.spark.createDataFrame(mpdf))
+            typ, answer = ("long", 0) if mode == "basic_count" else ("boolean", False)
+            out = out.unionByName(
+                local_frame(
+                    self.spark, [missing, [answer] * len(missing)],
+                    f"row_id long, {out_col} {typ}",
+                )
+            )
         return out
 
     def _predicate(

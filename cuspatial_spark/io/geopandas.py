@@ -187,14 +187,12 @@ class GeoLayers:
     def points_df(self, spark, ids=None):
         """Points layer as a Spark DataFrame (row_id, x, y) — the
         distributed side of a spatial join."""
-        import pandas as pd
+        from ..frames import local_frame
 
         rid = np.flatnonzero(self.feature_types == POINT)
         if ids is not None:
             rid = np.asarray(ids)[rid]
-        return spark.createDataFrame(
-            pd.DataFrame({"row_id": rid, "x": self.point_x, "y": self.point_y})
-        )
+        return local_frame(spark, {"row_id": rid, "x": self.point_x, "y": self.point_y})
 
     def __len__(self):
         return len(self.feature_types)

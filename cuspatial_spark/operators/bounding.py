@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..geometry import LinestringArrays, PolygonArrays
 
 
@@ -18,15 +19,13 @@ def polygon_bounding_boxes(polygons, spark=None) -> "DataFrame":
     """PolygonArrays -> bbox DataFrame (minx, miny, maxx, maxy)."""
     if isinstance(polygons, PolygonArrays):
         minx, miny, maxx, maxy = polygons.bounding_boxes()
-        import pandas as pd
-
-        pdf = pd.DataFrame(
-            {"polygon_id": polygons.ids, "minx": minx, "miny": miny,
-             "maxx": maxx, "maxy": maxy}
-        )
+        cols = {"polygon_id": polygons.ids, "minx": minx, "miny": miny,
+                "maxx": maxx, "maxy": maxy}
         if spark is None:
-            return pdf
-        return spark.createDataFrame(pdf)
+            import pandas as pd
+
+            return pd.DataFrame(cols)
+        return local_frame(spark, cols)
     # vertex-level DataFrame (geom_id, x, y)
     return polygons.groupBy("geom_id").agg(
         F.min("x").alias("minx"), F.min("y").alias("miny"),
@@ -39,15 +38,13 @@ def linestring_bounding_boxes(linestrings, expansion_radius: float, spark=None):
     (reference core/spatial/bounding.py:83-140)."""
     if isinstance(linestrings, LinestringArrays):
         minx, miny, maxx, maxy = linestrings.bounding_boxes(expansion_radius)
-        import pandas as pd
-
-        pdf = pd.DataFrame(
-            {"linestring_id": linestrings.ids, "minx": minx, "miny": miny,
-             "maxx": maxx, "maxy": maxy}
-        )
+        cols = {"linestring_id": linestrings.ids, "minx": minx, "miny": miny,
+                "maxx": maxx, "maxy": maxy}
         if spark is None:
-            return pdf
-        return spark.createDataFrame(pdf)
+            import pandas as pd
+
+            return pd.DataFrame(cols)
+        return local_frame(spark, cols)
     r = float(expansion_radius)
     return (
         linestrings.groupBy("geom_id")

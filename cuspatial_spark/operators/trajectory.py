@@ -7,8 +7,11 @@ aggregation (map-side combine) comes free from Catalyst.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..frames import local_frame
 
 
 def derive_trajectories(
@@ -43,12 +46,10 @@ def derive_trajectories(
         (r["__pid"], r["t"])
         for r in counts.groupBy("__pid").agg(F.sum("n").alias("t")).collect()
     )
-    bases, acc = [], 0
-    for pid, t in totals:
-        bases.append((pid, acc))
-        acc += int(t)
-    spark = df.sparkSession
-    base_df = spark.createDataFrame(bases, schema="__pid: int, __base: long")
+    pids, sizes = np.array(totals, dtype=np.int64).reshape(-1, 2).T
+    base_df = local_frame(
+        df.sparkSession, [pids, np.cumsum(sizes) - sizes], "__pid int, __base long"
+    )
     w = (
         Window.partitionBy("__pid")
         .orderBy(object_id)

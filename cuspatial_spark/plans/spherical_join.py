@@ -329,7 +329,23 @@ def geodesic_knn_join(
     counts — one row per query — are the only driver-side state.
     Rounds are bounded by max_rounds and by the half-circumference
     cap, and each round resolves the dense queries, so sparse-region
-    queries alone pay the later, wider rounds."""
+    queries alone pay the later, wider rounds.
+
+    Two behaviours to know before calling it:
+
+    * ``dense_threshold > 0`` (the default 1024) runs one eager
+      ``data.count()`` job at call time, whatever the data size or
+      ``initial_radius_km``, to choose the dense path.
+      ``dense_threshold=0`` skips that count; the progressive rounds
+      still run their own driver-synced jobs.
+    * The dense path always returns the full ``k`` nearest (or every
+      other data point, when there are fewer).  The progressive path
+      with a numeric ``initial_radius_km`` whose ``max_rounds`` run out
+      before the radius reaches half the circumference returns only the
+      neighbours within the last round's radius, so a starved query
+      can get fewer than ``k`` rows there.  A data side at or under
+      ``dense_threshold`` therefore answers such queries with the full
+      ``k``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if id_col == query_id_col:

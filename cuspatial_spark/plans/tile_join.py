@@ -34,10 +34,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from ..frames import local_frame
 from ..functions.expressions import morton_key_expr, tile_expr
 from ..geometry import LinestringArrays, PolygonArrays
 from ..kernels.pip import point_in_polygon_pairs
@@ -132,19 +134,18 @@ def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFr
     prev[ro[:-1][ring]] = ro[1:][ring] - 1
     ax, ay, bx, by = px[idx], py[idx], px[prev], py[prev]
     keep = (ax != bx) | (ay != by)
-    rows = []
-    for p in range(len(polygons)):
-        s, e = int(ro[po[p]]), int(ro[po[p + 1]])
-        m = keep[s:e]
-        segs = list(
-            zip(
-                ax[s:e][m].tolist(), ay[s:e][m].tolist(),
-                bx[s:e][m].tolist(), by[s:e][m].tolist(),
-            )
-        )
-        rows.append((int(p), int(polygons.ids[p]), segs))
-    return spark.createDataFrame(
-        rows, schema=f"__poly_idx long, polygon_id long, __segs {SEGS_SCHEMA}"
+    # polygon p owns the kept segments of vertices ro[po[p]]:ro[po[p+1]]
+    kept_before = np.concatenate(([0], np.cumsum(keep)))
+    segs = pa.ListArray.from_arrays(
+        kept_before[ro[po]].astype(np.int32),
+        pa.StructArray.from_arrays(
+            [ax[keep], ay[keep], bx[keep], by[keep]], names=["ax", "ay", "bx", "by"]
+        ),
+    )
+    return local_frame(
+        spark,
+        [np.arange(len(polygons)), polygons.ids, segs],
+        f"__poly_idx long, polygon_id long, __segs {SEGS_SCHEMA}",
     )
 
 
@@ -245,10 +246,7 @@ def point_in_polygon_join(
     bbox_idx, tiles = tiles_covering_bboxes(
         minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
     )
-    poly_tiles = spark.createDataFrame(
-        pd.DataFrame({"tile": tiles, "__poly_idx": bbox_idx}),
-        schema="tile: long, __poly_idx: long",
-    )
+    poly_tiles = local_frame(spark, [tiles, bbox_idx], "tile long, __poly_idx long")
 
     pts = assign_tiles(
         points, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level

@@ -196,7 +196,10 @@ def semantic_dedup(
 
     def sweep(key, pdf: pd.DataFrame) -> pd.DataFrame:
         b = int(key[1])
-        pdf = pdf.sort_values(id_col, kind="stable")
+        # the window's row number, not the id: with duplicate ids an id
+        # sort may order a tie differently from the window, and a block
+        # would then re-emit a row an earlier block owns and drop another
+        pdf = pdf.sort_values("__pos")
         E = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         out_start = min(b * s, len(pdf))
         nn, kept = _sweep_group(

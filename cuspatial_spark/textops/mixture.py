@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 
 def _uniform(id_col: str, seed: int, copy=None):
     """Deterministic uniform in [0, 1): the first 8 hex chars of
@@ -74,9 +76,10 @@ def mixture_rates(
     ).cast("double")
     counts = docs.groupBy(F.col(domain_col).alias("domain")).agg(mass.alias("c"))
     if materialize:
-        schema = counts.schema
         rows = counts.collect()
-        counts = docs.sparkSession.createDataFrame(rows, schema=schema)
+        counts = local_frame(
+            docs.sparkSession, [[r[f] for r in rows] for f in counts.columns], counts.schema
+        )
     tot = counts.agg(
         F.sum("c").alias("n"), F.sum(F.pow("c", F.lit(alpha))).alias("z")
     ).collect()[0]

@@ -20,8 +20,11 @@ range shuffle plus a ~thousand-row driver combine.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..frames import local_frame
 
 
 def pack_sequences(
@@ -85,14 +88,10 @@ def pack_sequences(
     totals = sorted(
         (r["__pid"], r["t"] or 0)
         for r in counts.groupBy("__pid").agg(F.sum("__w").alias("t")).collect()
-    )
-    bases, acc = [], 0
-    for pid, t in totals:
-        bases.append((pid, acc))
-        acc += int(t)
-    spark = docs.sparkSession
-    base_df = spark.createDataFrame(
-        bases or [(0, 0)], schema="__pid: int, __base: long"
+    ) or [(0, 0)]
+    pids, sizes = np.array(totals, dtype=np.int64).reshape(-1, 2).T
+    base_df = local_frame(
+        docs.sparkSession, [pids, np.cumsum(sizes) - sizes], "__pid int, __base long"
     )
     w = (
         Window.partitionBy("__pid")

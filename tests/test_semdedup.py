@@ -137,3 +137,31 @@ def test_block_parallel_sweep_equals_single_task(spark, emb_df):
             .orderBy("vec_id").toPandas()
         )
         pd.testing.assert_frame_equal(got, base)
+
+
+def test_block_sweep_with_duplicate_ids(spark):
+    """Duplicate ids straddling block boundaries: every input row is
+    emitted exactly once, as in the one-block sweep.  Each id appears
+    twice with two orthogonal unit vectors; vec_id 0 (the all-ones
+    vector) precedes them all with a positive cosine to each, so no
+    row's nearest-smaller similarity depends on how a tie is
+    ordered."""
+    rows = [(0, [1.0] * DIM)]
+    for k in range(1, 41):
+        for d in (2 * k % DIM, (2 * k + 1) % DIM):
+            v = [0.0] * DIM
+            v[d] = 1.0
+            rows.append((k, v))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartition(5)
+    cts = np.array([[1.0] * DIM])
+
+    def run(s):
+        out = semantic_dedup(df, centroids=cts, threshold=0.99, sweep_block_rows=s)
+        return sorted(
+            (r["vec_id"], r["nn_smaller_sim"], r["is_kept"]) for r in out.collect()
+        )
+
+    base = run(10**9)
+    assert len(base) == len(rows)
+    for s in (2, 3, 5):
+        assert run(s) == base, s
