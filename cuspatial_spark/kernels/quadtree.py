@@ -33,13 +33,20 @@ import numpy as np
 from .zorder import point_keys, z_order_x, z_order_y
 
 
+def min_scale(x_min, x_max, y_min, y_max, max_depth):
+    """The reference's smallest cell size for an AOI at ``max_depth``
+    (point_quadtree.cuh:263-268), and the default ``scale`` of every
+    tiled plan."""
+    return max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
+
+
 def clamp_scale(x_min, x_max, y_min, y_max, scale, max_depth):
     """Reference parameter sanitation (indexing.py:165-177 +
     point_quadtree.cuh:263-268): bounds normalized, scale >= min_scale."""
     x_min, x_max = min(x_min, x_max), max(x_min, x_max)
     y_min, y_max = min(y_min, y_max), max(y_min, y_max)
-    min_scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
-    return x_min, x_max, y_min, y_max, max(scale, min_scale)
+    scale = max(scale, min_scale(x_min, x_max, y_min, y_max, max_depth))
+    return x_min, x_max, y_min, y_max, scale
 
 
 @dataclass

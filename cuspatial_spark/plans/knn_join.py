@@ -26,8 +26,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.expressions import morton_key_expr, tile_expr
-from ..kernels.zorder import z_order
+from ..functions.expressions import _dilate2_expr, morton_key_expr, tile_expr
+from ..kernels.quadtree import min_scale
 
 
 def _undilate_expr(c):
@@ -37,15 +37,6 @@ def _undilate_expr(c):
     x = x.bitwiseOR(F.shiftright(x, 2)).bitwiseAND(F.lit(0x0F0F0F0F))
     x = x.bitwiseOR(F.shiftright(x, 4)).bitwiseAND(F.lit(0x00FF00FF))
     x = x.bitwiseOR(F.shiftright(x, 8)).bitwiseAND(F.lit(0x0000FFFF))
-    return x
-
-
-def _dilate_expr(c):
-    x = c.cast("bigint")
-    x = x.bitwiseOR(F.shiftleft(x, 8)).bitwiseAND(F.lit(0x00FF00FF))
-    x = x.bitwiseOR(F.shiftleft(x, 4)).bitwiseAND(F.lit(0x0F0F0F0F))
-    x = x.bitwiseOR(F.shiftleft(x, 2)).bitwiseAND(F.lit(0x33333333))
-    x = x.bitwiseOR(F.shiftleft(x, 1)).bitwiseAND(F.lit(0x55555555))
     return x
 
 
@@ -60,7 +51,7 @@ def _neighbor_tiles_expr(tx, ty, tile_level: int):
         for dy in (-1, 0, 1):
             cx = F.greatest(F.least(tx + dx, F.lit(n)), F.lit(0))
             cy = F.greatest(F.least(ty + dy, F.lit(n)), F.lit(0))
-            tiles.append(F.shiftleft(_dilate_expr(cy), 1).bitwiseOR(_dilate_expr(cx)))
+            tiles.append(F.shiftleft(_dilate2_expr(cy), 1).bitwiseOR(_dilate2_expr(cx)))
     return F.array_distinct(F.array(*tiles))
 
 
@@ -89,7 +80,7 @@ def knn_join(
     if radius is None:
         radius = max(x_max - x_min, y_max - y_min) / 64.0
     span = max(x_max - x_min, y_max - y_min)
-    scale = span / ((1 << max_depth) + 2)
+    scale = min_scale(x_min, x_max, y_min, y_max, max_depth)
     # tile size >= radius so the 3x3 neighborhood covers the disk
     tile_level = max(0, min(max_depth, int(np.floor(np.log2(span / radius)))))
 

@@ -9,8 +9,8 @@ geometries), it becomes a DataFrame of per-feature geometry arrays:
 
 The plan:
   1. polygons -> bbox (vectorized) -> explode to covered tiles
-  2. optional SALTING of hot tiles: every point gets
-     salt = pmod(hash(point id), n_salt); hot-tile polygon rows are
+  2. optional SALTING: every point gets
+     salt = pmod(hash(x, y), n_salt); polygon-tile rows are
      replicated n_salt times so the shuffle key (tile, salt) splits a
      skewed tile across n_salt reducers (web geotags cluster in
      cities — this is the expected case, AQE skew-join is the backstop)
@@ -31,10 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from ..functions.expressions import tile_expr
 from ..kernels.pip import point_in_polygon_pairs
-from ..kernels.zorder import z_order
-from .tile_join import assign_tiles
+from .tile_join import _pip_points, tiles_covering_bboxes
 
 
 def polygon_tiles_df(
@@ -50,10 +48,8 @@ def polygon_tiles_df(
 ) -> DataFrame:
     """Explode each polygon row to the tiles its bbox covers.
     Vectorized per Arrow batch; output carries the geometry inline so
-    the refine needs no second join."""
-    tile_scale = scale * (1 << (max_depth - tile_level))
-    n_cells = 1 << tile_level
-
+    the refine needs no second join.  A polygon with no vertex covers
+    no tile."""
     out_schema = StructType(
         [StructField("tile", LongType(), False)] + polygons_df.schema.fields
     )
@@ -62,25 +58,18 @@ def polygon_tiles_df(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xy = pdf[xy_col]
-            minx = np.array([np.min(v[::2]) for v in xy])
-            maxx = np.array([np.max(v[::2]) for v in xy])
-            miny = np.array([np.min(v[1::2]) for v in xy])
-            maxy = np.array([np.max(v[1::2]) for v in xy])
-            tx0 = np.clip(((minx - x_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-            tx1 = np.clip(((maxx - x_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-            ty0 = np.clip(((miny - y_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-            ty1 = np.clip(((maxy - y_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-            counts = (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
-            row_idx = np.repeat(np.arange(len(pdf), dtype=np.int64), counts)
-            flat = np.arange(int(counts.sum()), dtype=np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)))
-            local = flat - np.repeat(starts[:-1], counts)
-            w = np.repeat(tx1 - tx0 + 1, counts)
-            cx = np.repeat(tx0, counts) + local % w
-            cy = np.repeat(ty0, counts) + local // w
-            tiles = z_order(cx.astype(np.uint16), cy.astype(np.uint16)).astype(np.int64)
-            out = pdf.iloc[row_idx].reset_index(drop=True)
+            xy = pdf[xy_col].to_numpy()
+            nv = np.fromiter(map(len, xy), np.int64, len(xy)) // 2
+            flat = np.concatenate([np.asarray(v, np.float64) for v in xy])
+            vx, vy = flat[0::2], flat[1::2]
+            rows = np.flatnonzero(nv)
+            starts = (np.cumsum(nv) - nv)[rows]
+            bbox_idx, tiles = tiles_covering_bboxes(
+                np.minimum.reduceat(vx, starts), np.minimum.reduceat(vy, starts),
+                np.maximum.reduceat(vx, starts), np.maximum.reduceat(vy, starts),
+                x_min, y_min, scale, max_depth, tile_level,
+            )
+            out = pdf.iloc[rows[bbox_idx]].reset_index(drop=True)
             out.insert(0, "tile", tiles)
             yield out
 
@@ -101,48 +90,30 @@ def point_in_polygon_join_shuffle(
     tile_level: int = 8,
     keep_columns: list[str] | None = None,
     salt: int = 0,
-    hot_tiles: list[int] | None = None,
     id_col: str = "polygon_id",
     ring_offsets_col: str = "ring_offsets",
     xy_col: str = "xy",
 ) -> DataFrame:
-    """Shuffle-join variant of ``point_in_polygon_join``.
+    """Shuffle-join variant of ``point_in_polygon_join`` with the
+    kernel's (``edge_exact``) semantics.
 
-    ``salt`` > 0 replicates polygon-tile rows for ``hot_tiles`` (or
-    all tiles when hot_tiles is None) across ``salt`` buckets and adds
-    pmod(hash(x,y),salt) on the point side so one hot tile no longer
-    lands on a single reducer.
+    ``salt`` > 0 replicates every polygon-tile row across ``salt``
+    buckets and adds pmod(hash(x,y),salt) on the point side so one hot
+    tile no longer lands on a single reducer.
     """
-    if scale is None:
-        scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
-    keep = keep_columns if keep_columns is not None else list(points.columns)
-
-    ptiles = polygon_tiles_df(
-        polygons_df, x_min, y_min, scale, max_depth, tile_level,
-        id_col, ring_offsets_col, xy_col,
+    pts, keep, _, scale = _pip_points(
+        points, x, y, keep_columns, x_min, x_max, y_min, y_max, scale, max_depth, tile_level
     )
-    pts = assign_tiles(points, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level)
-    need = list(dict.fromkeys(keep + [x, y]))
-    pts = pts.select(*need, "tile")
+    # a row identity: polygon ids may repeat, geometries must not merge
+    ptiles = polygon_tiles_df(
+        polygons_df.withColumn("__prow", F.monotonically_increasing_id()),
+        x_min, y_min, scale, max_depth, tile_level, id_col, ring_offsets_col, xy_col,
+    )
 
     join_keys = ["tile"]
     if salt > 0:
-        salts = F.array(*[F.lit(s) for s in range(salt)])
-        if hot_tiles is not None:
-            hot = F.col("tile").isin([int(t) for t in hot_tiles])
-            ptiles = ptiles.withColumn(
-                "salt", F.explode(F.when(hot, salts).otherwise(F.array(F.lit(-1))))
-            )
-            pts = pts.withColumn(
-                "salt",
-                F.when(
-                    F.col("tile").isin([int(t) for t in hot_tiles]),
-                    F.pmod(F.hash(F.col(x), F.col(y)), F.lit(salt)),
-                ).otherwise(F.lit(-1)),
-            )
-        else:
-            ptiles = ptiles.withColumn("salt", F.explode(salts))
-            pts = pts.withColumn("salt", F.pmod(F.hash(F.col(x), F.col(y)), F.lit(salt)))
+        ptiles = ptiles.withColumn("salt", F.explode(F.array(*map(F.lit, range(salt)))))
+        pts = pts.withColumn("salt", F.pmod(F.hash(F.col(x), F.col(y)), F.lit(salt)))
         join_keys.append("salt")
 
     cand = pts.join(ptiles, on=join_keys, how="inner")
@@ -157,9 +128,9 @@ def point_in_polygon_join_shuffle(
             if len(pdf) == 0:
                 continue
             # compact per-batch polygon table: one entry per distinct
-            # polygon present; points map to it via unique's inverse
-            ids, first_idx, inv = np.unique(
-                pdf[id_col].to_numpy(), return_index=True, return_inverse=True
+            # polygon row present; points map to it via unique's inverse
+            _, first_idx, inv = np.unique(
+                pdf["__prow"].to_numpy(), return_index=True, return_inverse=True
             )
             ring_offsets = [0]
             poly_offsets = [0]

@@ -9,9 +9,10 @@ optimize end-to-end:
   filter:   points ⋈ exploded polygon-tile table
             - polygon side small  -> broadcast hash join (NO shuffle)
             - polygon side large  -> shuffle hash join on tile, with
-              optional salting for hot tiles
-  refine:   vectorized ray-cast PIP over each Arrow batch of candidate
-            pairs (kernels.pip.point_in_polygon_pairs)
+              optional salting (shuffle_join.py)
+  refine:   crossings-parity ray cast as a JVM expression over a
+            broadcast segment table, or, with edge_exact, the
+            Arrow-batched kernel (kernels.pip.point_in_polygon_pairs)
 
 Each point carries exactly one tile, so a (point, polygon) pair is
 produced at most once — no post-join dedup is needed.  A polygon is
@@ -20,7 +21,7 @@ phase's job, done as an equi-join).
 
 At 100 TB the only wide operation is the optional shuffle join; the
 broadcast path is shuffle-free: scan -> codegen filter/keys ->
-broadcast join -> mapInPandas -> sink.
+broadcast joins -> codegen ray cast (or mapInPandas) -> sink.
 
 The nearest-linestring join needs no join operator at all: the
 linestring cover is a driver-side CSR (tile -> candidate lines) that
@@ -43,6 +44,7 @@ from ..frames import local_frame
 from ..functions.expressions import morton_key_expr, tile_expr
 from ..geometry import LinestringArrays, PolygonArrays
 from ..kernels.pip import point_in_polygon_pairs
+from ..kernels.quadtree import min_scale
 from ..kernels.segment import point_linestring_distance_pairs
 from ..kernels.zorder import z_order
 
@@ -82,8 +84,8 @@ def tiles_covering_bboxes(
     """For each bbox, the Morton tile ids (at tile_level) its rectangle
     covers.  Returns (bbox_index, tile) flat arrays.  Vectorized per
     bbox over the covered cell grid; cells are clipped to the AOI grid
-    range so out-of-AOI bbox area is ignored (out-of-AOI points carry
-    the sentinel key and can never match)."""
+    range so out-of-AOI bbox area is ignored (the point-in-polygon
+    plans give out-of-AOI points tile -1, so they never match)."""
     tile_scale = scale * (1 << (max_depth - tile_level))
     n_cells = 1 << tile_level
     tx0 = np.clip(np.floor((minx - x_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
@@ -102,6 +104,42 @@ def tiles_covering_bboxes(
     cy = np.repeat(ty0, counts) + local // w
     tiles = z_order(cx.astype(np.uint16), cy.astype(np.uint16)).astype(np.int64)
     return bbox_idx, tiles
+
+
+def _pip_points(
+    points: DataFrame,
+    x: str,
+    y: str,
+    keep_columns: list[str] | None,
+    x_min: float,
+    x_max: float,
+    y_min: float,
+    y_max: float,
+    scale: float | None,
+    max_depth: int,
+    tile_level: int,
+) -> tuple[DataFrame, list[str], list[str], float]:
+    """The point side of both point-in-polygon plans: ``need`` (``keep``
+    plus the coordinates) and the tile.  Returns ``(points, keep, need,
+    scale)``.
+
+    A point outside the closed AOI gets tile -1, which no polygon
+    covers; its sentinel Morton key would put it in the top-right tile,
+    to match whatever polygon covers that tile.  The bounds are those
+    of ``morton_key_expr``'s sentinel, so points on ``x_max``/``y_max``
+    stay in; null and NaN coordinates fail them.  The rule is a value,
+    not a Filter, because Catalyst pushes a filter below a projection
+    that derives the coordinates and so computes them twice."""
+    if scale is None:
+        scale = min_scale(x_min, x_max, y_min, y_max, max_depth)
+    keep = keep_columns if keep_columns is not None else list(points.columns)
+    need = list(dict.fromkeys(keep + [x, y]))
+    px, py = F.col(x), F.col(y)
+    x_min, x_max, y_min, y_max = map(float, (x_min, x_max, y_min, y_max))
+    inside = (px >= x_min) & (px <= x_max) & (py >= y_min) & (py <= y_max)
+    pts = assign_tiles(points, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level)
+    tile = F.when(inside, F.col("tile")).otherwise(F.lit(-1)).alias("tile")
+    return pts.select(*need, tile), keep, need, scale
 
 
 PIP_JOIN_SCHEMA_SUFFIX = [StructField("polygon_id", LongType(), False)]
@@ -159,7 +197,7 @@ def _pip_jvm_hit_expr(segs, x, y):
     Difference vs the kernel: no ULP on-edge exclusion — a point lying
     exactly ON a polygon edge gets parity-dependent membership instead
     of a guaranteed False.  Measure-zero for real data; use
-    refine='kernel' when exact edge semantics matter.
+    edge_exact=True when exact edge semantics matter.
 
     The point rides in the fold's accumulator rather than being read
     from the outer row inside the lambda.  Spark canonicalizes a
@@ -202,18 +240,12 @@ def point_in_polygon_join(
     max_depth: int = 15,
     tile_level: int = 8,
     keep_columns: list[str] | None = None,
-    refine: str = "auto",
     edge_exact: bool = False,
 ) -> DataFrame:
     """Distributed containment join: returns the selected point columns
     plus ``polygon_id`` for every (point, polygon) containment pair.
-
-    edge_exact=True forces the Arrow kernel refine, which keeps the
-    reference's ULP on-edge exclusion exactly (a point ON a polygon
-    edge is deterministically excluded); the JVM fast path gives such
-    points parity-dependent membership instead.  Golden-parity claims
-    must set this (or refine='kernel') so results never silently
-    depend on the plan choice.
+    Points outside the closed AOI, or with a null or NaN coordinate,
+    match nothing.
 
     The polygon layer is broadcast (the common web-scale shape: points
     >> polygons).  Equivalent to the reference pipeline
@@ -221,43 +253,33 @@ def point_in_polygon_join(
     quadtree_point_in_polygon, with the tile grid playing the role of
     the quadtree's leaf quadrants.
 
-    refine: 'jvm' evaluates the ray-cast as a JVM higher-order
-    expression over a broadcast-joined segment table (no Python — the
-    fast path; measured 2-20x over the Arrow kernel at equal layer
-    size, tools/threshold_bench.py); 'kernel' uses the Arrow-batched
-    NumPy kernel (exact reference ULP edge semantics); 'auto' picks
-    'jvm' for layers with <= 200k segments (a broadcast-size bound —
-    plan size is constant since the segments became broadcast DATA
-    rather than literal expressions).
+    The refine follows the edge semantic alone.  By default the
+    crossings-parity ray cast runs as a JVM higher-order expression
+    over a broadcast-joined segment table, with no Python; a point
+    exactly ON an edge gets parity-dependent membership.
+    ``edge_exact=True`` runs the Arrow-batched NumPy kernel instead,
+    which keeps the reference's 4-ULP on-edge exclusion (such a point
+    is deterministically outside); golden-parity claims set it.  The
+    kernel is not a fast path: tools/threshold_bench.py measured the
+    JVM refine faster at every layer size tried.
     """
     from ..geometry import require_single_part
 
     require_single_part(polygons, "point_in_polygon_join")
-    if scale is None:
-        scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
-    keep = keep_columns if keep_columns is not None else [c for c in points.columns]
-    if edge_exact:
-        refine = "kernel"
-    elif refine == "auto":
-        refine = "jvm" if len(polygons.x) <= 200_000 else "kernel"
-
+    pts, keep, need, scale = _pip_points(
+        points, x, y, keep_columns, x_min, x_max, y_min, y_max, scale, max_depth, tile_level
+    )
     spark = points.sparkSession
     minx, miny, maxx, maxy = polygons.bounding_boxes()
     bbox_idx, tiles = tiles_covering_bboxes(
         minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
     )
     poly_tiles = local_frame(spark, [tiles, bbox_idx], "tile long, __poly_idx long")
-
-    pts = assign_tiles(
-        points, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level
-    )
-    # project to only what the refine needs before the Arrow boundary
-    need = list(dict.fromkeys(keep + [x, y]))
     candidates = pts.join(F.broadcast(poly_tiles), on="tile", how="inner").select(
         *need, "__poly_idx"
     )
 
-    if refine == "jvm":
+    if not edge_exact:
         seg_df = _polygon_segments_df(spark, polygons)
         hit = _pip_jvm_hit_expr(F.col("__segs"), F.col(x), F.col(y))
         return (
@@ -444,7 +466,7 @@ def point_to_nearest_linestring_join(
 
     require_single_part(linestrings, "point_to_nearest_linestring_join")
     if scale is None:
-        scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
+        scale = min_scale(x_min, x_max, y_min, y_max, max_depth)
     keep = keep_columns if keep_columns is not None else [c for c in points.columns]
     need = list(dict.fromkeys(keep + [x, y]))
     grid = (x_min, y_min, scale, max_depth, tile_level)

@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.expressions import morton_key_expr, tile_expr
+from ..kernels.quadtree import min_scale
+from ..plans.tile_join import assign_tiles
 
 
 def write_tiled(
@@ -43,11 +44,8 @@ def write_tiled(
     minimizes files touched per window/kNN scan; the directory `tile`
     key stays Morton-derived so partition pruning is unchanged."""
     if scale is None:
-        scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
-    key = morton_key_expr(F.col(x), F.col(y), x_min, x_max, y_min, y_max, scale, max_depth)
-    out = df.withColumn("morton_key", key).withColumn(
-        "tile", tile_expr(F.col("morton_key"), max_depth, tile_level)
-    )
+        scale = min_scale(x_min, x_max, y_min, y_max, max_depth)
+    out = assign_tiles(df, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level)
     if cluster == "hilbert":
         from ..functions.expressions import with_hilbert_key
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..plans.tile_join import assign_tiles
+from ..plans.tile_join import assign_tiles, point_in_polygon_join
 from ..sources.webpages import geotag_points
 from ..textops.analysis import language_id, quality_score
 from ..textops.extract import extract_text
@@ -75,9 +75,7 @@ def ingest_pages(
     out = geotag_points(out, x_min, x_max, y_min, y_max)
     if polygons is not None:
         # the pip join embeds its own tile assignment (filter phase)
-        from .spatial_stream import streaming_pip_join
-
-        return streaming_pip_join(
+        return point_in_polygon_join(
             out, polygons,
             x_min=x_min, x_max=x_max, y_min=y_min, y_max=y_max,
             scale=scale, max_depth=max_depth, tile_level=tile_level,

@@ -6,14 +6,13 @@ extension for continuous ingestion of geotagged pages/events:
 
 - ``streaming_tile_counts``: watermarked sliding-window occupancy per
   Morton tile (the streaming form of quadtree leaf counts);
-- ``streaming_pip_join``: the broadcast tile-filter + PIP refine plan
-  applied to a stream (stateless — safe under any trigger);
 - ``streaming_trajectory_state``: per-object running trajectory stats
   via ``applyInPandasWithState`` (custom stateful operator: cumulative
   distance, last position, point count).
 
-All three return unstarted streaming DataFrames/queries so callers
-choose sink + trigger.
+The batch ``plans.point_in_polygon_join`` is stateless, so it applies
+to a stream unchanged.  Every operator here returns an unstarted
+streaming DataFrame so callers choose sink + trigger.
 """
 
 from __future__ import annotations
@@ -31,8 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.expressions import morton_key_expr, tile_expr
-from ..geometry import PolygonArrays
+from ..plans.tile_join import assign_tiles
 
 
 def streaming_tile_counts(
@@ -53,39 +51,12 @@ def streaming_tile_counts(
 ) -> DataFrame:
     """Events per (time window, tile): watermark bounds state, the
     groupBy is the only shuffle, partial aggregation is map-side."""
-    key = morton_key_expr(F.col(x), F.col(y), x_min, x_max, y_min, y_max, scale, max_depth)
-    tiled = stream.withColumn("tile", tile_expr(key, max_depth, tile_level))
+    tiled = assign_tiles(stream, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level)
     win = F.window(F.col(ts), window, slide) if slide else F.window(F.col(ts), window)
     return (
         tiled.withWatermark(ts, watermark)
         .groupBy(win.alias("window"), "tile")
         .agg(F.count("*").alias("n_points"))
-    )
-
-
-def streaming_pip_join(
-    stream: DataFrame,
-    polygons: PolygonArrays,
-    x: str = "x",
-    y: str = "y",
-    x_min: float = 0.0,
-    x_max: float = 1.0,
-    y_min: float = 0.0,
-    y_max: float = 1.0,
-    scale: float | None = None,
-    max_depth: int = 15,
-    tile_level: int = 8,
-    keep_columns: list[str] | None = None,
-) -> DataFrame:
-    """The batch tile-join plan is stateless, so it applies to a
-    streaming DataFrame unchanged (broadcast join + mapInPandas are
-    both streaming-compatible)."""
-    from ..plans.tile_join import point_in_polygon_join
-
-    return point_in_polygon_join(
-        stream, polygons, x=x, y=y, x_min=x_min, x_max=x_max,
-        y_min=y_min, y_max=y_max, scale=scale, max_depth=max_depth,
-        tile_level=tile_level, keep_columns=keep_columns,
     )
 
 

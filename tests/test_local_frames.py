@@ -108,7 +108,7 @@ def test_plans_read_no_python_rdd(spark, sf_dir, arrow_off):
     docs = spark.range(100).select(F.col("id").alias("doc_id"), (F.col("id") % 9).alias("n_tokens"))
     plans = {
         "point_in_polygon_join": point_in_polygon_join(
-            pts, entry._polygons(), **entry.AOI, refine="jvm"
+            pts, entry._polygons(), **entry.AOI
         ),
         "pack_sequences": pack_sequences(docs, seq_len=16),
         "q_pip_join": entry.q_pip_join(spark, sf_dir),

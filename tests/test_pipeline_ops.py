@@ -268,7 +268,8 @@ class TestShuffleJoin:
 
 class TestStreaming:
     def test_tile_counts_and_pip(self, spark, tmp_path):
-        from cuspatial_spark.streaming import streaming_pip_join, streaming_tile_counts
+        from cuspatial_spark.plans import point_in_polygon_join
+        from cuspatial_spark.streaming import streaming_tile_counts
         from cuspatial_spark.geometry import PolygonArrays
         from tests import golden_fixtures as G
 
@@ -305,7 +306,7 @@ class TestStreaming:
         xy[::2] = G.SMALL_POLY_XS
         xy[1::2] = G.SMALL_POLY_YS
         polys = PolygonArrays.from_polygons_xy(xy, G.SMALL_RING_OFFSETS, G.SMALL_POLY_OFFSETS)
-        joined = streaming_pip_join(
+        joined = point_in_polygon_join(
             stream, polys, x_min=0, x_max=8, y_min=0, y_max=8,
             max_depth=8, tile_level=3, keep_columns=["point_id"],
         )

@@ -239,7 +239,6 @@ class TestTileJoinPlanShape:
             spark.createDataFrame(pdf), small_polygons,
             x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0,
             max_depth=10, tile_level=4, keep_columns=["point_id"],
-            refine="jvm",
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("BroadcastHashJoin") == 2  # tile filter + segs
@@ -314,10 +313,10 @@ class TestDistributedTileJoin:
         np.testing.assert_allclose(got["distance"], golden["distance"], rtol=1e-9)
 
     def test_edge_exact_forces_kernel_semantics(self, spark):
-        """edge_exact=True pins the Arrow-kernel refine: a point lying
-        exactly ON a polygon edge is deterministically excluded (the
-        reference's ULP on-edge semantics), regardless of the
-        layer-size-based jvm/kernel auto choice."""
+        """edge_exact=True selects the Arrow-kernel refine: a point
+        lying exactly ON a polygon edge is deterministically excluded
+        (the reference's ULP on-edge semantics), which the default JVM
+        refine does not promise."""
         square = PolygonArrays([0, 1], [0, 5],
                                [0.0, 4.0, 4.0, 0.0, 0.0],
                                [0.0, 0.0, 4.0, 4.0, 0.0])
@@ -352,7 +351,7 @@ class TestDistributedTileJoin:
             max_depth=8, tile_level=3, keep_columns=keep,
         )
         outs = [
-            point_in_polygon_join(pts, small_polygons, refine="jvm", **kw),
+            point_in_polygon_join(pts, small_polygons, **kw),
             point_in_polygon_join(pts, small_polygons, edge_exact=True, **kw),
         ]
         rows = []
@@ -393,7 +392,7 @@ pts = spark.range(0, 2000, 1, 4).select(
 polys = PolygonArrays(G.SMALL_POLY_OFFSETS, G.SMALL_RING_OFFSETS,
                       G.SMALL_POLY_XS, G.SMALL_POLY_YS)
 out = point_in_polygon_join(pts, polys, x_min=0.0, x_max=8.0, y_min=0.0,
-                            y_max=8.0, keep_columns=["page_id"], refine="jvm")
+                            y_max=8.0, keep_columns=["page_id"])
 out.write.format("noop").mode("overwrite").save()
 print("rows", out.count())
 spark.stop()

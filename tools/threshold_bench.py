@@ -1,19 +1,24 @@
-"""Validate the refine='auto' JVM/kernel threshold in plans/tile_join.
+"""Time the two point-in-polygon refines of plans/tile_join over
+square-grid polygon layers of increasing size.
 
-Round-2 history: the JVM refine originally embedded the polygon layer
-as LITERAL Catalyst expressions, whose plan-build cost grew
-super-linearly (measured 15.9 s at 1k segments, 46 s at 4k, 117 s at
-10k on this box) while execution stayed 2-20x faster than the Arrow
-kernel path.  That measurement drove the rewrite to a broadcast-joined
-segment DataFrame (plans/tile_join.py::_polygon_segments_df): same
-JVM-side HOF execution, constant plan size.  This tool measures
-both paths over a fixed point workload at increasing layer sizes and
-prints one JSON line per (n_segments, refine) cell:
+``point_in_polygon_join`` picks its refine from the edge semantic
+alone: ``edge_exact=False`` runs the crossings-parity ray cast as a JVM
+higher-order expression over a broadcast segment table,
+``edge_exact=True`` the Arrow-batched NumPy kernel.  This tool runs
+both over a fixed cached point workload and prints one JSON line per
+(n_segments, edge_exact) cell:
 
-    python tools/threshold_bench.py [n_points] [sizes...]
+    python tools/threshold_bench.py [n_points] [n_polys...]
 
-Round-2 measurement drives the documented threshold choice (see
-BASELINE.md "refine threshold" section).
+A square has 4 segments and 5 vertices.  The master is
+``local[$SPARK_GRAFT_CPUS]`` (default: the number of CPUs).
+
+History: the JVM refine once embedded the layer as LITERAL Catalyst
+expressions, whose plan-build time grew super-linearly (15.9 s at 1k
+segments, 117 s at 10k); the broadcast segment table made it constant.
+A former automatic refine choice sent layers over 200k vertices to the
+kernel; this tool measured the JVM refine faster at every size, so the
+switch is gone (BASELINE.md, "Refine-path threshold validation").
 """
 
 from __future__ import annotations
@@ -50,16 +55,16 @@ def main():
 
     from cuspatial_spark.plans import point_in_polygon_join
 
-    n_points = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
+    n_points = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     sizes = (
         [int(s) for s in sys.argv[2:]]
         if len(sys.argv) > 2
         else [250, 1000, 2500, 5000, 10000]
     )
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "16g")
+        SparkSession.builder.master(f"local[{cores}]")
+        .config("spark.sql.shuffle.partitions", str(2 * cores))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -71,7 +76,7 @@ def main():
             ((F.col("id") * 2654435761 % 1000003) / 1000003.0 * 8.0).alias("x"),
             ((F.col("id") * 40503 % 999983) / 999983.0 * 8.0).alias("y"),
         )
-        .repartition(64)
+        .repartition(2 * cores)
         .cache()
     )
     pts.count()
@@ -79,12 +84,12 @@ def main():
     for n_polys in sizes:
         layer = square_grid_layer(n_polys)
         n_segs = 4 * n_polys
-        for refine in ("jvm", "kernel"):
+        for edge_exact in (False, True):
             t0 = time.time()
             df = point_in_polygon_join(
                 pts, layer, x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0,
                 max_depth=12, tile_level=5, keep_columns=["point_id"],
-                refine=refine,
+                edge_exact=edge_exact,
             )
             df._jdf.queryExecution().executedPlan()  # force plan build
             t_plan = time.time() - t0
@@ -92,7 +97,7 @@ def main():
             df.write.format("noop").mode("overwrite").save()
             t_exec = time.time() - t1
             print(json.dumps({
-                "n_polys": n_polys, "n_segments": n_segs, "refine": refine,
+                "n_polys": n_polys, "n_segments": n_segs, "edge_exact": edge_exact,
                 "plan_sec": round(t_plan, 3), "exec_sec": round(t_exec, 3),
                 "total_sec": round(t_plan + t_exec, 3), "n_points": n_points,
             }), flush=True)
